@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints the official compact JSON line LAST
@@ -13,47 +12,6 @@ import org.apache.spark.sql.SparkSession
   * column materialization for scan-shaped queries).
   */
 object Bench {
-
-  /** Shuffle-volume amplification hints for queries whose shuffle bytes
-    * exceed their scan bytes by construction — the factor a real cluster
-    * would read off the shuffle-write metrics of a first run. Everything
-    * absent here shuffles about what it scans (factor 1): aggregations
-    * and joins exchange a subset of the input. The listed queries EXPAND
-    * before their heavy exchange: wedge frames are sum-of-degree-squared
-    * over edges (g1), character-gram / shingle explosion multiplies each
-    * document by its gram count (d13/d16), and the curation pipelines
-    * fan a document out across five gram/chunk stages (p1/p2).
-    */
-  private val shuffleAmp: Map[String, Long] = Map(
-    "g1_triangles" -> 16L,
-    "d16_dedup_prefix" -> 8L,
-    "d13_dup_spans" -> 8L,
-    "p1_curation_e2e" -> 4L,
-    "p2_crawl_curation" -> 4L)
-
-  /** Sum of data-file bytes under `dir` (recursive, hidden files AND
-    * files under hidden directories skipped — leftover `_temporary` /
-    * `.spark-staging` trees must not inflate the AQE sizing) — the
-    * scan volume the shuffle sizing derives from. */
-  private def inputBytes(dir: String): Long = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(root)) return 0L
-    def hiddenUnder(p: java.nio.file.Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != root) {
-        val n = cur.getFileName.toString
-        if (n.startsWith(".") || n.startsWith("_")) return true
-        cur = cur.getParent
-      }
-      false
-    }
-    val it = java.nio.file.Files.walk(root)
-    try {
-      it.filter(p => java.nio.file.Files.isRegularFile(p) &&
-          !hiddenUnder(p))
-        .mapToLong(p => java.nio.file.Files.size(p)).sum()
-    } finally it.close()
-  }
 
   /** Sequential-write throughput self-check (MB/s): `totalBytes`
     * through a FileChannel with force(true) — the round-5/6/7 official
@@ -220,13 +178,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpusN = cpus.toInt
-    // Shuffle-partition override for scale probes: at 10x+ data the
-    // cpus-sized default makes heavy shuffles (wedge frames, band
-    // buckets) spill; a real cluster sizes this to data volume, not
-    // cores, so the probe should too.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val cpus = Session.cpus(32)
     // Disk self-check BEFORE the JVM warms: rounds 5-7 each shipped an
     // official record contaminated by concurrent driver disk load.
     // QUIESCE FLOOR (round-9 follow-through: FIVE consecutive official
@@ -255,51 +207,10 @@ object Bench {
     // and would read 2-3x the steady level, poisoning the session median
     cpuStampMs()
     val cpuMs = cpuStampMs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalesce floor, env-pinnable for A/B runs. The measured
-      // default stays Spark's 1 MB: a 64 KB floor un-collapsed the
-      // CPU-heavy small shuffles (d16 3.47 -> 1.93) but taxed every
-      // many-exchange pipeline with swarms of sub-ms tasks (p8
-      // 9.4 -> 12.4, g1 6.6 -> 8.4 in the same windows) - a net loss,
-      // so this knob stays a deployment-level tuning point. An
-      // operator-level fix was attempted and REVERTED: an explicit
-      // REPARTITION_BY_NUM key-repartition ahead of the bucketPairs
-      // expansion still came out coalesced at runtime in the gate's
-      // plan shape (1 task at the 1 MB floor, 5 at 64 KB, 32 with
-      // coalescing disabled - i.e. the floor governed regardless),
-      // while isolated reproductions of the same subtree respect it;
-      // see OPTIMIZATION_r17.md "Not yet optimized".
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1048576"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.bench("graft-bench", cpus)
+    val initialFor = Session.sizing(sfDir, cpus)
 
-    // Data-volume-aware AQE shuffle sizing (replaces the round-7 blanket
-    // initialPartitionNum=512, which fixed the sf1 g1 wedge spill but
-    // taxed every sf0.1 query ~125ms of scheduling): every exchange
-    // starts at scan-bytes x per-query-amplification / 4MB partitions,
-    // clamped to [cpus, 512], and AQE coalesces down to advisory size.
-    // At sf0.1 (17.5MB scan) ordinary queries start at the core count —
-    // the r6 5.1s floor — while at sf1 (175MB) g1's x16 wedge expansion
-    // starts at 512 and stays unspilled (388s pinned -> 54s sized, the
-    // round-7 probe's catch). This is the sizing a real cluster derives
-    // from first-run shuffle-write metrics instead of a global constant.
-    val bytes = math.max(inputBytes(sfDir), 1L)
-    // SPARK_GRAFT_INITIAL_PARTS pins the value for every query (A/B runs).
-    val pinnedInitial = sys.env.get("SPARK_GRAFT_INITIAL_PARTS").map(_.toInt)
-    def initialFor(name: String): Int = pinnedInitial.getOrElse {
-      val amp = shuffleAmp.getOrElse(name, 1L)
-      val sized = (bytes * amp) / (4L << 20)
-      math.max(cpusN, math.min(512L, sized)).toInt
-    }
-
-    val skew = new StageSkewListener
+    val skew = new StageListener
     val wantSkew = sys.env.get("SPARK_GRAFT_TASKSTATS").exists(_ != "0")
     if (wantSkew) spark.sparkContext.addSparkListener(skew)
 
@@ -314,9 +225,8 @@ object Bench {
     // ±25% noise. The official sf0.1 record keeps the default protocol.
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
     val warmup = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").forall(_ != "0")
-    def setSizing(name: String): Unit = spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      initialFor(name).toString)
+    def setSizing(name: String): Unit =
+      spark.conf.set(Session.InitialPartitionNum, initialFor(name).toString)
     // One warm-up pass (JIT + codegen cache + file-footer cache), then the
     // minimum of three timed runs per query: single-shot timings on a
     // shared box swing ±25% from GC/JIT noise — and the round-5 official

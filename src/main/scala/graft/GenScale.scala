@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe data generator (dev tooling, like [[Bench]]/[[Verify]]):
@@ -98,16 +98,11 @@ object GenScale {
       if (args.length > 4) Some(args(4).split(",").map(_.trim).toSet)
       else None
     def wanted(name: String): Boolean = onlyTables.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-genscale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus(32)
+    val spark = Session(Some("graft-genscale"), cpus, cpus)
+    // events is read raw (not through Tables.events): a TIMESTAMP(NANOS)
+    // `ts` from an older testdata generation is copied as its nanos long
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")
@@ -234,9 +229,9 @@ object GenScale {
     // the fixture's planted 3-bit-flip near-dup pairs (dense ranks
     // make the pair partner always present, which the zipf id remap's
     // sparse id space would not). The m5 gate reads this table via
-    // the imageFixture media.parquet override; ImageDupProbe prints
-    // the effect sizes. Dense rank via one single-partition window:
-    // dev tooling over row counts this box generates, not a prod path.
+    // the imageFixture media.parquet override. Dense rank via one
+    // single-partition window: dev tooling over row counts this box
+    // generates, not a prod path.
     if (zipf) {
       import spark.implicits._
       val w = org.apache.spark.sql.expressions.Window.orderBy("doc_id")

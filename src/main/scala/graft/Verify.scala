@@ -96,19 +96,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val procs = Runtime.getRuntime.availableProcessors()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(16, procs).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        math.min(8, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_verify_wh_").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus(
+      math.min(16, Runtime.getRuntime.availableProcessors()))
+    val spark = Session(None, cpus, math.min(8, cpus),
+      Some(Files.createTempDirectory("graft_verify_wh_").toString))
     // Dev-only iteration filters; the driver sets no env so it runs all.
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)

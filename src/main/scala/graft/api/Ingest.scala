@@ -4,7 +4,8 @@ import graft.io._
 import graft.schema.TableMeta
 import graft.sink.{AuditLog, TableSink, TableRef}
 import graft.validate.ValidateAndSplit
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Path}
 import scala.collection.mutable.ListBuffer
@@ -60,6 +61,15 @@ final case class IngestReport(
   * (delete?) → audit log at each step. Never throws.
   */
 object Ingest {
+
+  /** Runs `write` on `df` and returns the rows it wrote, counted by an
+    * observed metric in the write pass itself: a `count()` afterwards
+    * would be a second pass over the input (re-running validation). */
+  private def counted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
+  }
 
   def execute(conf: IngestConfig, store: ObjectStore = new LocalStore)(
       implicit spark: SparkSession): IngestReport = {
@@ -135,22 +145,21 @@ object Ingest {
               // O10 happens inside ValidateAndSplit; for copy mode conform
               // handles names. Cache: both split sides scan this frame.
               val raw = raw0.persist(StorageLevel.MEMORY_AND_DISK)
-              def prov(df: org.apache.spark.sql.DataFrame) =
-                conf.sourceFileCol.fold(df)(c =>
-                  df.withColumn(c, org.apache.spark.sql.functions.lit(fname)))
+              def prov(df: DataFrame) =
+                conf.sourceFileCol.fold(df)(c => df.withColumn(c, lit(fname)))
               try {
                 if (conf.justCopy) {
                   // O22: conform to target schema minus process_dt.
-                  TableSink.appendConformed(prov(raw), conf.table)
-                  validRows += raw.count()
+                  validRows += counted(prov(raw))(TableSink.appendConformed(_, conf.table))
                 } else {
                   val meta = conf.metadata.getOrElse(throw new IllegalArgumentException(
                     "metadata required when justCopy=false"))
                   val split = ValidateAndSplit(raw, meta)
-                  TableSink.append(prov(split.valid), conf.table)     // O21
-                  TableSink.append(prov(split.invalid), conf.table.errorSibling)
-                  validRows += split.valid.count()
-                  invalidRows += split.invalid.count()
+                  val valid = counted(prov(split.valid))(TableSink.append(_, conf.table)) // O21
+                  val invalid = counted(prov(split.invalid))(
+                    TableSink.append(_, conf.table.errorSibling))
+                  validRows += valid
+                  invalidRows += invalid
                 }
               } finally raw.unpersist()
               processed += fname

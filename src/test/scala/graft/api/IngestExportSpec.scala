@@ -139,6 +139,38 @@ class IngestExportSpec extends AnyFunSuite {
     assert(rows.forall(_.isNullAt(2))) // note absent from file -> NULL
   }
 
+  test("ingest report counts are the rows each append wrote: first and later append, copy mode") {
+    def landed(ref: TableRef) = (spark.table(ref.qualified).count(),
+      spark.table(ref.errorSibling.qualified).count())
+    def run(ref: TableRef, dir: java.nio.file.Path, regex: String,
+        justCopy: Boolean) = {
+      val r = Ingest.execute(IngestConfig("tester", ref, dir.toString, regex,
+        metadata = Some(meta), justCopy = justCopy))
+      assert(r.ok, r.errors.mkString("; "))
+      (r.validRows, r.invalidRows)
+    }
+    val dir = Files.createTempDirectory("ing_counts_")
+    Files.writeString(dir.resolve("clean.csv"),
+      "id,amount,note\n1,1.0,a\n2,2.0,b\n3,3.0,c\n")
+    Files.writeString(dir.resolve("mixed.csv"),
+      "id,amount,note\n4,4.0,d\n,5.0,no-id\n6,bad,bad-amount\n7,,e\n")
+
+    // the first append creates both tables; the file has no invalid rows
+    val ref = freshRef("vcounts")
+    assert(run(ref, dir, "clean\\.csv", justCopy = false) === ((3L, 0L)))
+    assert(landed(ref) === ((3L, 0L)))
+    // a later append lands in the existing tables
+    assert(run(ref, dir, "mixed\\.csv", justCopy = false) === ((2L, 2L)))
+    assert(landed(ref) === ((5L, 2L)))
+
+    // copy mode: every row counts as valid and lands in the main table
+    val copyRef = freshRef("vcounts_copy")
+    spark.sql(s"""CREATE TABLE ${copyRef.qualified}
+      (id BIGINT, amount DOUBLE, note STRING, process_dt TIMESTAMP) USING parquet""")
+    assert(run(copyRef, dir, "clean\\.csv", justCopy = true) === ((3L, 0L)))
+    assert(spark.table(copyRef.qualified).count() === 3L)
+  }
+
   test("ingest latest=true picks newest matching file; delete removes source") {
     val dir = Files.createTempDirectory("ingl_")
     val f1 = dir.resolve("feed_1.csv"); Files.writeString(f1, "id,amount,note\n1,1.0,old\n")
